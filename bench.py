@@ -77,26 +77,10 @@ def run_bench() -> dict:
         timings[name] = round(time.perf_counter() - t0, 3)
 
     # Informational extras (NOT in the headline total, so round-over-
-    # round totals stay comparable): pipeline_e2e with the distributed
-    # two-pass scan enabled — the plan shape a 100 TB single-stream
-    # run would use — plus the adaptive-band similarity/graph ops, so
-    # the scale paths have measured costs, not just plan assertions.
-    from llm_map_reduce_summarizer_spark.operators.scan import SCAN_CONF
-
+    # round totals stay comparable): the adaptive-band similarity/graph
+    # ops, so the scale paths have measured costs, not just plan
+    # assertions.
     extras: dict[str, float] = {}
-    spark.conf.set(SCAN_CONF, "true")
-    try:
-        queries["pipeline_e2e"](spark, "/root/testdata/sf0.001").write.format(
-            "noop"
-        ).mode("overwrite").save()  # warm the scan-mode plan shapes
-        t0 = time.perf_counter()
-        queries["pipeline_e2e"](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        extras["pipeline_e2e_scan_conf"] = round(time.perf_counter() - t0, 3)
-    finally:
-        spark.conf.set(SCAN_CONF, "false")
-
     for name in (
         "knn_graph",
         "emb_clusters",

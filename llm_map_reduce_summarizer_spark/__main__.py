@@ -197,7 +197,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
             *[F.lit(x) for kv in idx.items() for x in kv]
         )
         ordered = summaries.select(
-            (mapping[F.col("doc_id")] * F.lit(1_000_000_000)
+            (mapping[F.col("doc_id")].cast("long") * F.lit(1_000_000_000)
              + F.col("chunk_id")).alias("chunk_id"),
             "summary",
         )

@@ -64,10 +64,6 @@ def token_count(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(TOKEN_PATTERN), 0))
 
 
-def word_count(col: Column) -> Column:
-    return F.size(F.split(F.trim(col), r"\s+"))
-
-
 def quantize(col: Column, decimals: int) -> Column:
     """floor(x*10^d + 0.5)/10^d — half-up rounding computed purely in
     IEEE doubles. Unlike engine round() (decimal-string HALF_UP in

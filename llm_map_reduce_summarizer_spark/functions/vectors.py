@@ -127,14 +127,6 @@ def sql_unit_cte(table: str = "embeddings", id_col: str = "vec_id") -> str:
     )
 
 
-def sql_sign_bucket(a: str, n_bits: int = 8) -> str:
-    terms = " + ".join(
-        f"CASE WHEN {a}[{b}] >= 0 THEN {2 ** (b - 1)} ELSE 0 END"
-        for b in range(1, n_bits + 1)
-    )
-    return f"CAST(({terms}) AS BIGINT)"
-
-
 def sql_adaptive_bits_cte(
     table: str = "embeddings",
     target: int = BUCKET_TARGET_OCCUPANCY,

@@ -6,21 +6,28 @@ Two implementations:
   accumulate-and-reset loop (big_chunkeroosky.py:80-145) is inherently
   sequential; we re-express it as a *prefix-sum bucketing*:
   ``chunk_id = floor(cum_tokens_before / budget)``. One window pass,
-  parallel within and across transcripts, same budget discipline
-  (each chunk's token sum stays within budget + one segment overshoot,
-  exactly like the greedy version's last-segment overshoot rule).
+  parallel across transcripts. It is NOT the greedy rule: a chunk
+  starts wherever the running sum crosses a budget multiple, so a
+  many-segment chunk can overrun the budget by up to one segment.
 
 * ``assign_chunks_greedy`` — faithful reset semantics via
-  ``applyInPandas`` (parallel across transcripts, sequential within —
+  ``greedy_pack`` (parallel across transcripts, sequential within —
   the reference's own data dependency). Use when bit-level parity with
   the reference chunk boundaries matters more than the extra scan.
+
+``greedy_pack_ids`` is the one copy of the greedy rule; every greedy
+packer (the chunker, corpus/multimodal packing, streaming packing)
+calls it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..functions.text import format_timestamp, quantize, token_count
@@ -62,22 +69,14 @@ def assign_chunks(
 
     With ``doc_col`` the cumulative sum is an ordinary per-document
     window (each document sorts inside its own partition). Without it
-    the order is global, so the naive window would collapse to one
-    task — instead the exclusive prefix sum runs as a distributed
-    two-pass scan (operators/scan.py), keeping every partition busy.
+    the input is ONE transcript whose order is global, so the window
+    runs as one task — bounded by transcript length; multi-transcript
+    callers (the CLI, the benchmark) pass ``doc_col``.
 
     ``counter='tiktoken'`` reproduces the reference's BPE-exact chunk
     boundaries (big_chunkeroosky.py:43) when tiktoken is installed.
     """
-    from .scan import scan_enabled, with_prefix_sums
-
     counted = with_token_counts(segments, counter)
-    if doc_col is None and scan_enabled(segments):
-        scanned = with_prefix_sums(counted, "seg_id", {"_cum_prev": "n_tokens"})
-        return scanned.withColumn(
-            "chunk_id",
-            F.floor(F.col("_cum_prev") / F.lit(max_tokens_per_chunk)),
-        ).drop("_cum_prev")
     w = Window.partitionBy(*_part(doc_col)).orderBy("seg_id")
     cum_prev = F.coalesce(
         F.sum("n_tokens").over(w.rowsBetween(Window.unboundedPreceding, -1)),
@@ -134,10 +133,55 @@ def chunk_stats(
     return stats
 
 
-GREEDY_SCHEMA = (
-    "seg_id long, start double, end double, speaker string, "
-    "seg_text string, n_tokens long, chunk_id long"
-)
+def greedy_pack_ids(
+    sizes: Iterable[int], budget: int, pack_id: int = 0, acc: int = 0
+) -> tuple[list[int], int, int]:
+    """The reference's accumulate-and-reset rule (big_chunkeroosky.py:
+    86-99): an item that would push a non-empty pack over ``budget``
+    starts the next pack; an oversized item keeps a pack of its own.
+
+    ``(pack_id, acc)`` is the open pack's id and fill. Returns the
+    items' pack ids plus the state after the last item, so a caller
+    that sees the items in pieces (micro-batches) carries the state
+    into the next call and gets the same ids as one call.
+    """
+    ids = []
+    for n in sizes:
+        n = int(n)
+        if acc > 0 and acc + n > budget:
+            pack_id += 1
+            acc = 0
+        ids.append(pack_id)
+        acc += n
+    return ids, pack_id, acc
+
+
+def greedy_pack(
+    df: DataFrame,
+    key: str,
+    order_col: str,
+    size_col: str,
+    budget: int,
+    out_col: str,
+) -> DataFrame:
+    """Greedy packing per ``key`` group: sort the group by
+    ``order_col`` and number its packs of ``size_col`` in ``out_col``.
+
+    Parallel across groups (Arrow-batched pandas groups, one group per
+    key value), sequential within — the recurrence's own dependency.
+    Output: ``df``'s columns plus ``out_col`` (long).
+    """
+    schema = StructType(
+        [StructField(f.name, f.dataType) for f in df.schema]
+        + [StructField(out_col, LongType())]
+    )
+
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order_col).reset_index(drop=True)
+        pdf[out_col] = greedy_pack_ids(pdf[size_col], budget)[0]
+        return pdf
+
+    return df.groupBy(key).applyInPandas(pack, schema=schema)
 
 
 def assign_chunks_greedy(
@@ -156,36 +200,20 @@ def assign_chunks_greedy(
     budgets matching the reference when the library is installed.
     """
     counted = with_token_counts(segments, counter).select(
+        *_part(doc_col),
         "seg_id", "start", "end", "speaker", "seg_text", "n_tokens",
-        *( [doc_col] if doc_col else [] ),
     )
-
-    def greedy(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("seg_id").reset_index(drop=True)
-        chunk_ids, cid, acc = [], 0, 0
-        for n in pdf["n_tokens"]:
-            if acc > 0 and acc + n > max_tokens_per_chunk:
-                cid += 1
-                acc = 0
-            chunk_ids.append(cid)
-            acc += n
-        pdf["chunk_id"] = chunk_ids
-        return pdf[[
-            *( [doc_col] if doc_col else [] ),
-            "seg_id", "start", "end", "speaker", "seg_text", "n_tokens",
-            "chunk_id",
-        ]]
-
     if doc_col:
-        doc_type = counted.schema[doc_col].dataType.simpleString()
-        return counted.groupBy(doc_col).applyInPandas(
-            greedy, schema=f"{doc_col} {doc_type}, " + GREEDY_SCHEMA
+        return greedy_pack(
+            counted, doc_col, "seg_id", "n_tokens", max_tokens_per_chunk,
+            "chunk_id",
         )
     # Single-transcript fallback ONLY: one pandas group = one task. Any
     # corpus-scale caller must pass doc_col so groups parallelize.
-    return counted.withColumn("_g", F.lit(0)).groupBy("_g").applyInPandas(
-        lambda pdf: greedy(pdf.drop(columns=["_g"])), schema=GREEDY_SCHEMA
-    )
+    return greedy_pack(
+        counted.withColumn("_g", F.lit(0)), "_g", "seg_id", "n_tokens",
+        max_tokens_per_chunk, "chunk_id",
+    ).drop("_g")
 
 
 SENT_SEP = "\u001f"  # unit separator: survives both engines' regex paths

@@ -147,6 +147,11 @@ def materialize_all(dfs: list[DataFrame]) -> list[DataFrame]:
     # function-only form warns and skips them). Cap the pool — each
     # worker is a concurrent Spark job, and past a handful they only
     # contend for the same executor slots.
-    target = inheritable_thread_target(dfs[0].sparkSession)(materialize)
+    session = dfs[0].sparkSession
+    wrap = inheritable_thread_target(session)
+    # with pinned-thread mode off the wrapper hands back its argument
+    # (the session), and plain threads already share the caller's
+    # properties
+    target = materialize if wrap is session else wrap(materialize)
     with ThreadPoolExecutor(max_workers=min(len(dfs), 8)) as pool:
         return list(pool.map(target, dfs))

@@ -69,37 +69,17 @@ def merge_same_speaker(
     Combined text matches the reference: single-segment groups keep the
     raw text; multi-segment groups join '[MM:SS] text' parts.
     """
-    from .scan import scan_enabled, with_lag_over_order, with_prefix_sums
-
     part = _part(doc_col)
-    if doc_col is None and scan_enabled(segments):
-        # global order at scale: two-pass distributed lag + prefix scan
-        # instead of a single-task window (operators/scan.py)
-        lagged = with_lag_over_order(segments, "seg_id", "speaker", "_prev_spk")
-        flagged = lagged.withColumn(
-            "spk_change",
-            F.when(
-                F.col("_prev_spk").isNull()
-                | (F.col("_prev_spk") != F.col("speaker")),
-                1,
-            ).otherwise(0),
-        ).drop("_prev_spk")
-        flagged = with_prefix_sums(
-            flagged, "seg_id", {"_isl_prev": "spk_change"}
-        ).withColumn("island", F.col("_isl_prev") + F.col("spk_change")).drop(
-            "_isl_prev"
-        )
-    else:
-        w = Window.partitionBy(*part).orderBy("seg_id")
-        frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        flagged = segments.withColumn(
-            "spk_change",
-            F.when(
-                F.lag("speaker").over(w).isNull()
-                | (F.lag("speaker").over(w) != F.col("speaker")),
-                1,
-            ).otherwise(0),
-        ).withColumn("island", F.sum("spk_change").over(frame))
+    w = Window.partitionBy(*part).orderBy("seg_id")
+    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    flagged = segments.withColumn(
+        "spk_change",
+        F.when(
+            F.lag("speaker").over(w).isNull()
+            | (F.lag("speaker").over(w) != F.col("speaker")),
+            1,
+        ).otherwise(0),
+    ).withColumn("island", F.sum("spk_change").over(frame))
 
     wi = Window.partitionBy(*part, "island").orderBy("seg_id")
     cum_prev = F.coalesce(

@@ -13,7 +13,8 @@ at test scale, fatal at 100 TB. The classic fix is the two-pass scan:
 
 Total cost: one range exchange + per-partition sorts + a broadcast of
 #partitions rows. Results are bit-identical to the single-partition
-window for associative sums.
+window for associative sums. Used by catalog keys whose prefix sums
+run over a whole table's global order (plans/tpch.py, plans/events.py).
 """
 
 from __future__ import annotations
@@ -21,20 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-# Conf flag: when "true", order-dependent operators (chunk assignment,
-# speaker merge) run their global prefix sums through the two-pass scan
-# instead of a single-partition window. Default off: below ~10M rows
-# the extra range exchanges cost more than the one-task sort saves
-# (measured 2x at sf0.1); on a real cluster against TB inputs, ON is
-# the only shape that works at all.
-SCAN_CONF = "spark.llm_map_reduce_summarizer.distributedScan"
-
-
-def scan_enabled(df: DataFrame) -> bool:
-    return (
-        df.sparkSession.conf.get(SCAN_CONF, "false").lower() == "true"
-    )
 
 
 def with_prefix_sums(
@@ -84,32 +71,3 @@ def with_prefix_sums(
         ).drop(f"_loc_{out}", f"_off_{out}")
     return joined.drop("_pid")
 
-
-def with_lag_over_order(
-    df: DataFrame,
-    order_col: str,
-    lag_col: str,
-    out_col: str,
-) -> DataFrame:
-    """Global ``lag(lag_col) over (order by order_col)`` without a
-    single-partition window: local lags + the previous partition's last
-    value stitched across the boundary via a tiny broadcast."""
-    rp = df.repartitionByRange(F.col(order_col)).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    wloc = Window.partitionBy("_pid").orderBy(order_col)
-    local = rp.withColumn("_lag_loc", F.lag(lag_col).over(wloc))
-
-    last_per_pid = rp.groupBy("_pid").agg(
-        F.max_by(lag_col, order_col).alias("_last")
-    )
-    # previous NON-EMPTY partition's last value (empty partitions never
-    # appear in the groupBy, so a pid+1 shift would skip over them)
-    wprev = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    prevs = last_per_pid.select(
-        "_pid", F.last("_last", ignorenulls=True).over(wprev).alias("_prev_last")
-    )
-    stitched = local.join(F.broadcast(prevs), "_pid", "left").withColumn(
-        out_col, F.coalesce("_lag_loc", "_prev_last")
-    )
-    return stitched.drop("_lag_loc", "_prev_last", "_pid")

@@ -47,6 +47,7 @@ from ..functions.vectors import (
     sql_sign_bucket_dynamic,
     sql_unit_cte,
 )
+from ..operators.chunker import greedy_pack
 from ..operators.grouped import grouped_map_batched
 from ..operators.persist import materialize
 from ..operators.profile import profile_oracle_sql
@@ -2431,27 +2432,13 @@ def corpus_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales with the number of streams (at 100 TB: source×date buckets,
     millions of groups).
     """
-    import pandas as pd
-
-    d = _docs(spark, sf_dir)
-    counted = d.select(
-        "doc_id", "source", token_count(F.col("text")).alias("n_tokens")
+    counted = _docs(spark, sf_dir).select(
+        "doc_id",
+        "source",
+        token_count(F.col("text")).cast("long").alias("n_tokens"),
     )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        ids, pid, acc = [], 0, 0
-        for n in pdf["n_tokens"]:
-            if acc > 0 and acc + n > PACK_BUDGET_TOKENS:
-                pid += 1
-                acc = 0
-            ids.append(pid)
-            acc += n
-        pdf["pack_id"] = ids
-        return pdf[["doc_id", "source", "n_tokens", "pack_id"]]
-
-    return counted.groupBy("source").applyInPandas(
-        pack, schema="doc_id long, source string, n_tokens long, pack_id long"
+    return greedy_pack(
+        counted, "source", "doc_id", "n_tokens", PACK_BUDGET_TOKENS, "pack_id"
     )
 
 
@@ -2745,35 +2732,20 @@ def multimodal_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets, millions of independent groups); byte lengths ride the
     scan, no pre-shuffle.
     """
-    import pandas as pd
-
     d = _docs(spark, sf_dir).withColumn(
         "payload", F.encode(F.col("text"), "UTF-8")
     )
     n_bytes = F.length("payload").cast("long")
     sized = d.select(
         "doc_id",
-        n_bytes.alias("n_bytes"),
         F.when(n_bytes % 3 == 0, "jpeg")
         .when(n_bytes % 3 == 1, "png")
         .otherwise("webp")
         .alias("fmt"),
+        n_bytes.alias("n_bytes"),
     )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        ids, sid, acc = [], 0, 0
-        for n in pdf["n_bytes"]:
-            if acc > 0 and acc + n > MM_PACK_BUDGET_BYTES:
-                sid += 1
-                acc = 0
-            ids.append(sid)
-            acc += n
-        pdf["shard_id"] = ids
-        return pdf[["doc_id", "fmt", "n_bytes", "shard_id"]]
-
-    return sized.groupBy("fmt").applyInPandas(
-        pack, schema="doc_id long, fmt string, n_bytes long, shard_id long"
+    return greedy_pack(
+        sized, "fmt", "doc_id", "n_bytes", MM_PACK_BUDGET_BYTES, "shard_id"
     )
 
 

@@ -5,7 +5,9 @@ deterministically from the ``documents`` table: each doc becomes one
 segment (start = doc_id * 30 s, duration = n_chars / 16 s — a power-of-
 two divisor so every timestamp is an exact double and both engines'
 floating-point arithmetic is bit-identical). Speakers are the doc
-sources, so consecutive same-source docs exercise the merge operator.
+sources. The fixed tables have no two consecutive same-source docs, so
+``seg_merge_speaker`` leaves every segment in a group of its own; the
+multi-segment merge is exercised by the operator tests instead.
 
 Oracle SQL twins are composed from shared CTE fragments that mirror
 each operator step 1:1.

@@ -13,7 +13,7 @@ Bucket pruning also applies: an equality filter on the bucket key scans
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def save_bucketed(
@@ -36,6 +36,3 @@ def save_bucketed(
     writer = writer.sortBy(*(sort_cols or bucket_cols))
     writer.saveAsTable(table_name)
 
-
-def bucketed_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)

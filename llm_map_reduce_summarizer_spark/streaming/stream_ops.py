@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.chunker import greedy_pack_ids
+
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes, matches plans/events.py
 
 
@@ -529,23 +531,16 @@ def _make_pack_fold(budget: int):
         if state.hasTimedOut:
             state.remove()
             return
-        source = key[0]
         pid, acc = state.get if state.exists else (0, 0)
-        rows = []
+        packed = []
         for pdf in pdfs:
             pdf = pdf.sort_values("doc_id")
-            for doc_id, n in zip(pdf["doc_id"], pdf["n_tokens"]):
-                n = int(n)
-                if acc > 0 and acc + n > budget:
-                    pid += 1
-                    acc = 0
-                rows.append((int(doc_id), source, n, pid))
-                acc += n
+            ids, pid, acc = greedy_pack_ids(pdf["n_tokens"], budget, pid, acc)
+            packed.append(pdf.assign(pack_id=ids))
         state.update((pid, acc))
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "source", "n_tokens", "pack_id"]
-            )
+        for pdf in packed:
+            if len(pdf):
+                yield pdf[PACK_OUT_SCHEMA.fieldNames()]
 
     return _pack_fold
 
@@ -861,15 +856,6 @@ RESERVOIR_OUT_SCHEMA = StructType(
         StructField("sample_key", StringType()),
     ]
 )
-
-
-def _sample_draw(doc_id: int) -> str:
-    """Python twin of ``shuffle_sort_key(doc_id, "usample")`` — used
-    by tests to predict reservoir contents; the operator itself reads
-    the JVM-computed column."""
-    import hashlib
-
-    return hashlib.md5(f"usample|{doc_id}".encode()).hexdigest()
 
 
 def _make_reservoir_fold(k: int):

@@ -21,3 +21,19 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "16")
     s = get_spark("tests")
     yield s
+
+
+# The default run deselects `slow` tests (pytest.ini); this cap keeps
+# that deselected share from growing unnoticed. Raise it only together
+# with a matching cut elsewhere.
+MAX_SLOW_TESTS = 18
+
+
+@pytest.hookimpl(tryfirst=True)
+def pytest_collection_modifyitems(config, items):
+    n_slow = sum(1 for item in items if item.get_closest_marker("slow"))
+    if n_slow > MAX_SLOW_TESTS:
+        raise pytest.UsageError(
+            f"{n_slow} tests carry the `slow` mark; at most "
+            f"{MAX_SLOW_TESTS} may (the default run deselects them)"
+        )

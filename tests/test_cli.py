@@ -69,13 +69,16 @@ def test_cli_flag_variants(spark, tmp_path):
 
 
 def test_cli_multi_file_input_orders_across_files(spark, tmp_path):
-    _write_transcript(tmp_path, "a.json", n=4)
-    _write_transcript(tmp_path, "b.json", n=4)
+    # four files: file index 3 times the 1e9 chunk-id offset overflows
+    # a 32-bit int under ANSI mode unless the index is widened first
+    for name in ("a.json", "b.json", "c.json", "d.json"):
+        _write_transcript(tmp_path, name, n=4)
     args = build_parser().parse_args(
         ["--input", str(tmp_path / "*.json"), "--quiet"]
     )
     result = run(spark, args)
-    assert result["segments"] == 8
+    assert result["segments"] == 16
+    assert result["chunks"] >= 4
 
 
 def test_cli_custom_prompt_file(spark, tmp_path):

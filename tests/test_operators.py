@@ -365,10 +365,7 @@ def test_asof_join_backward_semantics(spark):
 def test_distributed_prefix_scan_matches_window(spark):
     from pyspark.sql.window import Window
 
-    from llm_map_reduce_summarizer_spark.operators.scan import (
-        with_lag_over_order,
-        with_prefix_sums,
-    )
+    from llm_map_reduce_summarizer_spark.operators.scan import with_prefix_sums
 
     df = spark.range(0, 10_000).select(
         F.col("id").alias("k"),
@@ -386,38 +383,6 @@ def test_distributed_prefix_scan_matches_window(spark):
         ).count()
         == 0
     )
-
-    lagged = with_lag_over_order(df, "k", "s", "prev_s")
-    expected_lag = df.withColumn("prev_s", F.lag("s").over(Window.orderBy("k")))
-    assert (
-        lagged.select("k", "prev_s").exceptAll(
-            expected_lag.select("k", "prev_s")
-        ).count()
-        == 0
-    )
-
-
-def test_scan_conf_path_equals_window_path(spark):
-    from llm_map_reduce_summarizer_spark.operators.scan import SCAN_CONF
-
-    rows = [
-        (i, i * 10.0, i * 10.0 + 30.0, f"SPK_{(i // 3) % 4}", f"text {i}")
-        for i in range(200)
-    ]
-    segs = preprocess_segments(_segments(spark, rows))
-    default_merge = merge_same_speaker(segs).toPandas()
-    default_chunks = assign_chunks(segs, 50).toPandas()
-    spark.conf.set(SCAN_CONF, "true")
-    try:
-        scan_merge = merge_same_speaker(segs).toPandas()
-        scan_chunks = assign_chunks(segs, 50).toPandas()
-    finally:
-        spark.conf.set(SCAN_CONF, "false")
-
-    for a, b in ((default_merge, scan_merge), (default_chunks, scan_chunks)):
-        a = a.sort_values(list(a.columns)).reset_index(drop=True)
-        b = b[a.columns].sort_values(list(a.columns)).reset_index(drop=True)
-        assert a.equals(b)
 
 
 def test_scan_plan_has_no_single_partition_window(spark):

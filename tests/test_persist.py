@@ -226,3 +226,20 @@ def test_materialize_all_concurrent_checkpoints(spark):
     only = materialize_all([a])
     assert only[0].count() == 10
     assert materialize_all([]) == []
+
+
+def test_materialize_all_without_pinned_threads(spark, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, pyspark's inheritable_thread_target
+    returns its argument unchanged — here the session, which is not a
+    thread target."""
+    import pyspark
+
+    from llm_map_reduce_summarizer_spark.operators.persist import (
+        materialize_all,
+    )
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", lambda f: f)
+    a = spark.range(4).withColumnRenamed("id", "a")
+    b = spark.range(2).withColumnRenamed("id", "b")
+    out = materialize_all([a, b])
+    assert [df.count() for df in out] == [4, 2]

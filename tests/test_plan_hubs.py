@@ -51,6 +51,10 @@ HUB_ZERO_SCAN = [
     "knn_ivf_nprobe_curve",
     "knn_recall_report",
     "dedup_method_agreement",
+    "doc_quality_ensemble",
+    "quality_injection_eval",
+    "events_experiment_readout",
+    "events_daily_health",
 ]
 
 _NODES = re.compile(r"^\(\d+\) ", re.M)
